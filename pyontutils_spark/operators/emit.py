@@ -9,16 +9,20 @@ a distinct — Catalyst's partial HashAggregate does the map-side dedup,
 so the shuffle moves only already-unique rows.
 
 Page IRIs are minted JVM-side with ``sha2(url, 256)`` (same bytes as
-the kernel's ``page_iri`` — no Python in the hot path).
+the kernel's ``page_iri`` — no Python in the hot path).  Entity triples
+are generated JVM-side too, from the compiled lexicon's term table
+(``lexcompile``, one row per term): only terms that survive the
+left-semi join to the linked ids are exploded into triples, and no
+per-triple row is ever built on the driver.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..kernel.curies import DEFAULT as PREFIXES
 from ..kernel.ids import PAGE_NS
 from . import vocab
+from .lexcompile import CompiledLexicon, compile_lexicon
 
 XSD_BOOLEAN = "http://www.w3.org/2001/XMLSchema#boolean"
 
@@ -51,46 +55,54 @@ def mention_triples(linked: DataFrame) -> DataFrame:
                              F.col("iri"), False)))
 
 
-def entity_triple_rows(term: dict):
-    """Driver-side flatMap of one lexicon term -> triple dicts
-    (lexicon-derived facts; the analog of Class._triples)."""
-    iri = term["iri"]
-
-    def row(pred, obj, is_lit, datatype=None):
-        return dict(term_id=term["term_id"], subj=iri, pred=pred, obj=obj,
-                    obj_is_literal=is_lit, obj_datatype=datatype,
-                    obj_lang=None)
-
-    yield row(vocab.RDF_TYPE, vocab.OWL_CLASS, False)
-    yield row(vocab.RDFS_LABEL, term["label"], True)
-    for s in term.get("synonyms", ()):
-        yield row(vocab.NIFRID_SYNONYM, s, True)
-    if term.get("definition"):
-        yield row(vocab.DEFINITION, term["definition"], True)
-    for p in term.get("parents", ()):
-        yield row(vocab.RDFS_SUBCLASSOF, PREFIXES.expand(p), False)
-    if term.get("deprecated"):
-        yield row(vocab.OWL_DEPRECATED, "true", True)
-        if term.get("replaced_by"):
-            yield row(vocab.REPLACED_BY,
-                      PREFIXES.expand(term["replaced_by"]), False)
+def _po(pred: str, obj, is_literal: bool) -> F.Column:
+    return F.struct(F.lit(pred).alias("pred"), obj.alias("obj"),
+                    F.lit(is_literal).alias("obj_is_literal"))
 
 
-def entity_triples(spark: SparkSession, lexicon: list[dict],
+def entity_triples(spark: SparkSession,
+                   lexicon: list[dict] | CompiledLexicon,
                    linked: DataFrame | None = None) -> DataFrame:
-    """Lexicon-derived triples, optionally restricted (left-semi join) to
-    entities actually linked somewhere in the corpus."""
-    rows = [r for t in lexicon for r in entity_triple_rows(t)]
-    df = spark.createDataFrame(
-        rows, schema="term_id long, " + vocab.TRIPLE_SCHEMA)
+    """Lexicon-derived triples (the analog of ``Class._triples``),
+    optionally restricted to entities linked somewhere in the corpus.
+
+    The compiled lexicon's term table (one row per term: label,
+    synonyms, definition, expanded parents, deprecation) is shipped as
+    one Arrow stream and left-semi joined to the linked term ids FIRST;
+    the surviving terms then generate their triples in the JVM with one
+    ``explode`` (type + label, one per synonym, one per parent, and the
+    definition / deprecated / replacedBy facts that are present).  A raw
+    lexicon is compiled first."""
+    table = compile_lexicon(lexicon).terms
+    if table["label"].null_count:
+        raise ValueError("entity triples need a label on every term")
+    terms = spark.createDataFrame(table)
     if linked is not None:
         ids = linked.select("term_id").distinct()
-        df = df.join(ids, "term_id", "left_semi")
-    return df.drop("term_id")
+        # the distinct linked ids are bounded by the lexicon size
+        terms = terms.join(F.broadcast(ids), "term_id", "left_semi")
+    po = F.concat(
+        F.array(_po(vocab.RDF_TYPE, F.lit(vocab.OWL_CLASS), False),
+                _po(vocab.RDFS_LABEL, F.col("label"), True)),
+        F.transform("synonyms",
+                    lambda s: _po(vocab.NIFRID_SYNONYM, s, True)),
+        F.transform("parents",
+                    lambda p: _po(vocab.RDFS_SUBCLASSOF, p, False)),
+        F.filter(F.array(
+            _po(vocab.DEFINITION, F.col("definition"), True),
+            _po(vocab.OWL_DEPRECATED,
+                F.when(F.col("deprecated"), F.lit("true")), True),
+            _po(vocab.REPLACED_BY, F.col("replaced_by"), False)),
+            lambda t: t["obj"].isNotNull()))
+    return (terms.select(F.col("iri").alias("subj"),
+                         F.explode(po).alias("t"))
+            .select("subj", "t.pred", "t.obj", "t.obj_is_literal",
+                    F.lit(None).cast("string").alias("obj_datatype"),
+                    F.lit(None).cast("string").alias("obj_lang")))
 
 
 def emit_triples(spark: SparkSession, pages: DataFrame, linked: DataFrame,
-                 lexicon: list[dict]) -> DataFrame:
+                 lexicon: list[dict] | CompiledLexicon) -> DataFrame:
     """Full factory output with set semantics (union + distinct).
 
     ``pages`` should be the RAW pages table (url suffices — passing the
@@ -99,6 +111,9 @@ def emit_triples(spark: SparkSession, pages: DataFrame, linked: DataFrame,
     the entity semi-join), so it is persisted here — without the reuse
     point the whole extract->mention->link chain would execute twice.
     Callers owning a longer lifecycle can pass an already-persisted plan.
+    ``lexicon`` is term dicts or the ``CompiledLexicon`` the caller
+    already holds (the factory passes the one it compiled), whose term
+    table feeds ``entity_triples``.
     """
     if linked.storageLevel.useMemory or linked.storageLevel.useDisk:
         linked_cached = linked

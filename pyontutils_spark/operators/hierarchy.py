@@ -62,7 +62,12 @@ def transitive_closure(edges: DataFrame, max_depth: int = 30,
     narrow in-partition sort — a Spark attr-capture quirk) or
     re-materialized.  Measured on the 1M-edge 4-ary tree (9.5M closure
     rows): 27.3 s -> 20.9 s across the round-7 steps, identical
-    output; plan evidence in plans/r07/transitive_closure_*."""
+    output; plan evidence in plans/r07/transitive_closure_*.
+
+    Not concurrency-safe: ``spark.sql.adaptive.enabled`` is switched
+    off on the SHARED session for the whole iteration and restored
+    after, so no other query may run on that session meanwhile (it
+    would silently run without AQE), and calls must not nest."""
     from functools import reduce
 
     sess = edges.sparkSession

@@ -10,7 +10,11 @@ Scale design: the top-1 winner depends ONLY on ``pattern_norm``, never
 on the mention row — so the argmax is computed once per pattern on the
 driver (lexicon-sized, tiny) and linking is a single broadcast hash
 join with NO shuffle and NO window over the 10^12-row mention table.
-The full candidate table (with scores) is still exposed for the
+The argmax runs inside the lexicon compile pass
+(``lexcompile.compile_lexicon``), which the triple factory runs once per
+call and shares with the mention stage and entity-triple emission;
+``candidates_df`` ships its table to Spark as one Arrow stream.  The
+full candidate table (with scores) is still exposed for the
 scoring/inspection path.
 """
 
@@ -18,49 +22,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..kernel.norm import local_degrade, natsort_key, token_set_ratio
+from ..kernel.norm import natsort_key, token_set_ratio
+from .lexcompile import (  # noqa: F401  (scores are part of this API)
+    SCORE_LABEL, SCORE_SYNONYM, CompiledLexicon, compile_lexicon,
+    term_patterns)
 
-SCORE_LABEL = 1.0
-SCORE_SYNONYM = 0.9
 #: fuzzy tier: score = SCORE_FUZZY_BASE * token_set_ratio, so any fuzzy
 #: hit (< 0.8) always ranks below every exact label (1.0) / synonym
 #: (0.9) hit — the ordered-probe priority of the reference's
 #: exhaustive checks with nltklib similarity as the last resort
 #: (ilxutils/interlex_ingestion.py:103-117; nltklib.py:36-70).
 SCORE_FUZZY_BASE = 0.8
-
-
-def candidate_rows(lexicon: list[dict], min_length: int = 3) -> list[dict]:
-    """(pattern_norm, term_id, curie, iri, score, is_synonym) rows."""
-    rows = []
-    for t in lexicon:
-        if len(t["label_norm"]) >= min_length:
-            rows.append(dict(pattern_norm=t["label_norm"],
-                             term_id=t["term_id"], curie=t["curie"],
-                             iri=t["iri"], score=SCORE_LABEL,
-                             is_synonym=False))
-        for s in t.get("synonyms", ()):
-            sn = local_degrade(s)
-            if len(sn) >= min_length:
-                rows.append(dict(pattern_norm=sn, term_id=t["term_id"],
-                                 curie=t["curie"], iri=t["iri"],
-                                 score=SCORE_SYNONYM, is_synonym=True))
-    return rows
-
-
-def best_candidates(lexicon: list[dict], min_length: int = 3) -> list[dict]:
-    """Driver-side argmax per pattern: max score, then natsort-min curie.
-    Mirrors the ordered-scan first-hit of the reference's exhaustive
-    checks, made order-independent."""
-    best: dict[str, dict] = {}
-    for r in candidate_rows(lexicon, min_length):
-        cur = best.get(r["pattern_norm"])
-        key = (-r["score"], natsort_key(r["curie"]))
-        if cur is None or key < cur["_key"]:
-            r = dict(r, _key=key)
-            best[r["pattern_norm"]] = r
-    return [{k: v for k, v in r.items() if k != "_key"}
-            for r in best.values()]
 
 
 def fuzzy_candidate_rows(patterns: list[str], lexicon: list[dict],
@@ -78,23 +50,19 @@ def fuzzy_candidate_rows(patterns: list[str], lexicon: list[dict],
     O(patterns x block size), not O(patterns x lexicon): any pair with
     similarity >= min_ratio necessarily shares trigrams (both shared
     tokens and single-token typos do), while unrelated strings are
-    never scored.  Ties break by natsort of the curie, like
-    best_candidates."""
+    never scored.  Ties break by natsort of the curie, like the exact
+    tiers' argmax."""
 
     def grams(s: str) -> set:
         return ({s[i:i + 3] for i in range(len(s) - 2)}
                 if len(s) >= 3 else {s})
 
-    exact = {r["pattern_norm"] for r in candidate_rows(lexicon,
-                                                       min_length=1)}
+    exact = {p for t in lexicon for p, _ in term_patterns(t) if p}
     # inverted index: trigram -> [(cand_text, is_synonym, term)]
     index: dict[str, list] = {}
     all_entries: list = []
     for t in lexicon:
-        for cand_text, is_syn in (
-                [(t["label_norm"], False)]
-                + [(local_degrade(s), True)
-                   for s in t.get("synonyms", ())]):
+        for cand_text, is_syn in term_patterns(t):
             entry = (cand_text, is_syn, t)
             all_entries.append(entry)
             for g in grams(cand_text):
@@ -131,13 +99,16 @@ def fuzzy_candidate_rows(patterns: list[str], lexicon: list[dict],
     return list(out.values())
 
 
-def candidates_df(spark: SparkSession, lexicon: list[dict],
+def candidates_df(spark: SparkSession,
+                  lexicon: list[dict] | CompiledLexicon,
                   min_length: int = 3, best_only: bool = True) -> DataFrame:
-    rows = (best_candidates if best_only else candidate_rows)(
-        lexicon, min_length)
+    """(pattern_norm, term_id, curie, iri, score, is_synonym) candidates
+    of patterns at least ``min_length`` long: the top-1 per pattern
+    (``best_only``) or all of them.  Shipped as one Arrow table from the
+    compiled lexicon; a raw lexicon is compiled first."""
+    lex = compile_lexicon(lexicon, min_length)
     return spark.createDataFrame(
-        rows, schema=("pattern_norm string, term_id long, curie string, "
-                      "iri string, score double, is_synonym boolean"))
+        lex.best_candidates if best_only else lex.candidates)
 
 
 def label_and_definition_check(probes: DataFrame, lexicon_df: DataFrame

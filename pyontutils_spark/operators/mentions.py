@@ -20,28 +20,28 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernel.ac import AhoCorasick, build_matcher
-from ..kernel.norm import local_degrade
+from .lexcompile import CompiledLexicon, lexicon_patterns
 
 MENTION_SCHEMA = ("url string, start int, end int, "
                   "surface string, pattern_norm string")
 
 
-def build_automaton(lexicon: list[dict], min_length: int = 3,
+def build_automaton(lexicon: list[dict] | CompiledLexicon,
+                    min_length: int = 3,
                     types: set[str] | None = None):
     """Unique degraded patterns -> payload is the pattern itself (link
     candidates are resolved later by a broadcast join on pattern_norm).
-    ``types`` filters lexicon categories (annotate's includeCat).
+    ``lexicon``: term dicts or a ``CompiledLexicon``, whose pattern set
+    is used as is.  ``types`` filters lexicon categories (annotate's
+    includeCat) and walks the terms again.
     Implementation auto-selected: C-speed regex alternation for
     small/medium lexicons, pure-Python Aho-Corasick past ~20k patterns
     (identical leftmost-longest semantics either way)."""
-    pats = set()
-    for t in lexicon:
-        if types is not None and t.get("type") not in types:
-            continue
-        pats.add(t["label_norm"])
-        for s in t.get("synonyms", ()):
-            pats.add(local_degrade(s))
-    return build_matcher(((p, p) for p in sorted(pats)),
+    if types is not None:
+        terms = (lexicon.lexicon if isinstance(lexicon, CompiledLexicon)
+                 else lexicon)
+        lexicon = [t for t in terms if t.get("type") in types]
+    return build_matcher(((p, p) for p in lexicon_patterns(lexicon)),
                          min_length=min_length)
 
 
@@ -72,19 +72,17 @@ _JAVA_BOUNDARY_L = r"(?<![\p{IsAlphabetic}\p{Digit}])"
 _JAVA_BOUNDARY_R = r"(?![\p{IsAlphabetic}\p{Digit}])"
 
 
-def jvm_mention_pattern(lexicon: list[dict], min_length: int = 3) -> str:
+def jvm_mention_pattern(lexicon: list[dict] | CompiledLexicon,
+                        min_length: int = 3) -> str:
     """Java-regex alternation equivalent to the broadcast matcher:
     longest-first alternatives (= longest-at-position like the AC's
     longest_only), case-insensitive, flanked by the same
     non-alphanumeric boundary the AC enforces (Unicode alnum via
-    lookarounds — Java \\b would wrongly treat '_' as a word char)."""
+    lookarounds — Java \\b would wrongly treat '_' as a word char).
+    ``lexicon``: term dicts or a ``CompiledLexicon``."""
     import re as _re
 
-    pats = set()
-    for t in lexicon:
-        pats.add(t["label_norm"])
-        for s in t.get("synonyms", ()):
-            pats.add(local_degrade(s))
+    pats = lexicon_patterns(lexicon)
     ordered = sorted((p for p in pats if len(p) >= min_length),
                      key=lambda p: (-len(p), p))
     alternation = "|".join(_re.escape(p) for p in ordered)
@@ -96,7 +94,8 @@ def jvm_mention_pattern(lexicon: list[dict], min_length: int = 3) -> str:
             f"{_JAVA_BOUNDARY_R}")
 
 
-def detect_mentions_jvm(pages: DataFrame, lexicon: list[dict],
+def detect_mentions_jvm(pages: DataFrame,
+                        lexicon: list[dict] | CompiledLexicon,
                         text_col: str = "text",
                         lang_filter: str | None = "en",
                         min_length: int = 3) -> DataFrame:
@@ -126,7 +125,8 @@ def detect_mentions_jvm(pages: DataFrame, lexicon: list[dict],
         .withColumn("pattern_norm", F.lower("surface")))
 
 
-def detect_mentions_hybrid(pages: DataFrame, lexicon: list[dict],
+def detect_mentions_hybrid(pages: DataFrame,
+                           lexicon: list[dict] | CompiledLexicon,
                            automaton_bc,
                            lang_filter: str | None = "en",
                            min_length: int = 3,
@@ -141,11 +141,10 @@ def detect_mentions_hybrid(pages: DataFrame, lexicon: list[dict],
 
     Output: (url, surface, pattern_norm) — the factory consumes only
     url + pattern_norm; use detect_mentions/_fused when the annotate
-    contract needs offsets."""
-    n_patterns = len({p for t in lexicon
-                      for p in (t["label_norm"],
-                                *map(local_degrade, t.get("synonyms", ())))})
-    if n_patterns > max_jvm_patterns:
+    contract needs offsets.  ``lexicon``: term dicts or a
+    ``CompiledLexicon`` (its pattern set sizes the choice and builds
+    the alternation)."""
+    if len(lexicon_patterns(lexicon)) > max_jvm_patterns:
         return detect_mentions_fused(pages, automaton_bc,
                                      lang_filter=lang_filter) \
             .select("url", "surface", "pattern_norm")
@@ -161,7 +160,8 @@ def detect_mentions_hybrid(pages: DataFrame, lexicon: list[dict],
     return jvm_part.unionByName(html_part)
 
 
-def broadcast_automaton(spark: SparkSession, lexicon: list[dict],
+def broadcast_automaton(spark: SparkSession,
+                        lexicon: list[dict] | CompiledLexicon,
                         min_length: int = 3):
     return spark.sparkContext.broadcast(
         build_automaton(lexicon, min_length=min_length))

@@ -38,6 +38,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import emit, linking, mentions as mention_ops
+from ..operators.lexcompile import compile_lexicon
 from ..operators.ordering import commutative_checksum
 
 LINEAGE_DIRNAME = "_lineage"
@@ -113,6 +114,7 @@ def run_with_lineage(spark: SparkSession, pages: DataFrame,
 
     triples_dir = os.path.join(out_dir, "triples")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    lexicon = compile_lexicon(lexicon)
     ac_bc = mention_ops.broadcast_automaton(spark, lexicon)
     cands = linking.candidates_df(spark, lexicon)
 

@@ -12,6 +12,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: tmpfs holds shuffle and spill files in RAM: it is the default scratch
+#: only with at least this much free, so a spill-heavy job falls back to
+#: Spark's disk default instead of exhausting host memory
+MIN_TMPFS_FREE_BYTES = 4 << 30
+
+
+def default_local_dir(shm: str = "/dev/shm") -> str | None:
+    """The per-user tmpfs scratch dir, or None (Spark's default) when
+    ``shm`` is missing or has less than MIN_TMPFS_FREE_BYTES free.  The
+    uid suffix keeps two OS users on one host out of each other's
+    files."""
+    try:
+        st = os.statvfs(shm)
+    except OSError:
+        return None
+    if st.f_bavail * st.f_frsize < MIN_TMPFS_FREE_BYTES:
+        return None
+    return os.path.join(shm, f"spark-graft-local-{os.getuid()}")
+
 
 def get_spark(app: str = "pyontutils_spark",
               cores: int | None = None,
@@ -25,13 +44,14 @@ def get_spark(app: str = "pyontutils_spark",
     # Shuffle/spill scratch space belongs on the fastest local storage
     # (guide: shuffle cost shows up as disk+fetch in the downstream
     # stage).  Parameterised: SPARK_GRAFT_LOCAL_DIR overrides; default
-    # to tmpfs when present (measured ~10% on shuffle-heavy graph
-    # iteration plus far lower variance), else leave Spark's default.
-    # Cluster managers (YARN/K8s) override spark.local.dir themselves,
-    # so this only shapes local/standalone runs.
+    # to a per-user tmpfs dir when it has room (measured ~10% on
+    # shuffle-heavy graph iteration plus far lower variance), else
+    # leave Spark's default.  Cluster managers (YARN/K8s) override
+    # spark.local.dir themselves, so this only shapes local/standalone
+    # runs.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark-graft-local"
+    if local_dir is None:
+        local_dir = default_local_dir()
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
     b = (SparkSession.builder

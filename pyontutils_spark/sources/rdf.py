@@ -278,10 +278,13 @@ def nifttl_per_graph(triples: DataFrame, namespaces: dict,
     feeding ONE Arrow-batched pandas UDF that loops over many graphs
     per batch (round 7): ``applyInPandas`` paid per-GROUP pandas/Arrow
     framing, which dominated wall-clock at document scale (5k 36-triple
-    graphs: 9.2 s -> 1.9 s, byte-identical output).  Memory shape is
-    unchanged — either form materializes one whole document's triples
-    per group, which the serializer needs anyway; a graph is a FILE,
-    not a corpus.
+    graphs: 9.2 s -> 1.9 s, byte-identical output).  Either form
+    materializes one whole document's triples per group, which the
+    serializer needs anyway; a graph is a FILE, not a corpus.  Size
+    ceiling: each graph's triples travel as ONE aggregated row (and one
+    Arrow cell), so a single graph must stay under ~2 GB serialized —
+    the JVM's row and Arrow buffer limit, which applyInPandas's
+    per-group streaming did not impose.  Split larger graphs upstream.
 
     ``namespaces`` must be a plain dict (broadcast via closure); per-
     graph prefix blocks can differ only through culling — pass the

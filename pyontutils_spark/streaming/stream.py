@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import emit, linking, mentions as mention_ops
+from ..operators.lexcompile import compile_lexicon
 from ..synth.spark_gen import PAGES_SCHEMA
 
 
@@ -41,6 +42,7 @@ def stream_triples(spark: SparkSession, input_path: str,
     a replayed batch overwrites its own ``batch=<id>`` directory.
     """
     pages = read_pages_stream(spark, input_path)
+    lexicon = compile_lexicon(lexicon)
     ac_bc = mention_ops.broadcast_automaton(spark, lexicon)
     cands = linking.candidates_df(spark, lexicon)
 
@@ -186,6 +188,7 @@ def mention_rate(spark: SparkSession, input_path: str,
     """Streaming DataFrame: mentions per (window, entity iri), tolerant
     of late pages up to the watermark."""
     pages = read_pages_stream(spark, input_path)
+    lexicon = compile_lexicon(lexicon)
     ac_bc = mention_ops.broadcast_automaton(spark, lexicon)
     cands = linking.candidates_df(spark, lexicon)
     # warc_ts rides through the fused Python stage as a passthrough column
